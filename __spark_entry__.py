@@ -23,19 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (SURVEY.md §7 step 2): the status probe as a query —
     per-database source watermark vs target watermark with the reference's
     equal/behind/ahead classification (A1 + J1 + F7 over the events stream).
-
-    Also kicks off the daemon-thread prewarm of the sf0.01 fixtures and
-    per-process fixed costs (layouts, Derby boot, pair memo) so the
-    driver's verify sweep — which runs right after this smoke check, at
-    sf0.01 — doesn't pay them inside its first slow keys. The thread is
-    fault-isolated (every step individually try/except'd) and gated by
-    SPARK_GRAFT_PREWARM — set it to 0 to keep entry() strictly
-    side-effect-free (e.g. when smoke-checking in a profiler).
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
-        registry.prewarm(spark, "/root/testdata/sf0.01")
     return join_watermark_compare(spark, "/root/testdata/sf0.001")
 
 

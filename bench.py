@@ -149,7 +149,7 @@ def _bench_replication(spark, sf_dir: str) -> dict[str, float]:
     throughput with first-compile fixed costs (whole-stage codegen for the
     repl plans), which measured ±1.4 s of pure jitter on identical code —
     the r3→r4 "regression" (1.49→2.51 s incremental) was exactly this;
-    diagnosed in scripts/diag_e2e_regression.py, where e2e AFTER the
+    diagnosed in round 12 (docs/BENCH_NOTES.md), where e2e AFTER the
     headline passes was FASTER than a fresh-session run (warm codegen),
     ruling out accumulated-state contention."""
     import glob
@@ -315,16 +315,14 @@ def _ngram_pair_counts(spark, sf_dir: str, probe_dir: str) -> dict:
     for tag, d in (("ngram_base", sf_dir), ("ngram_x10", probe_dir)):
         docs = load_table(spark, d, "documents")
         out[tag] = ngram_pair_jaccard(
-            docs, f"pairprobe_{tag}", memo_token=None, min_jaccard=0.0
+            docs, f"pairprobe_{tag}", sf_dir=None, min_jaccard=0.0
         ).count()
     return out
 
 
 def _web_counts_one(spark, d: str) -> dict:
-    """THE canonical L2e/L37 volume-counter definitions for ONE sf_dir —
-    shared by the bench probe and scripts/probe_web_scaling.py (round-11
-    review: two independent copies would silently diverge on an output
-    rename): canonical-URL group count (llm_dedup_url's output
+    """THE canonical L2e/L37 volume-counter definitions for ONE sf_dir:
+    canonical-URL group count (llm_dedup_url's output
     cardinality) and total domain-graph edge MASS Σw
     (llm_domain_authority's true cost driver: the edge KEY space
     saturates at n_domains² while aggregated link mass keeps growing
@@ -426,7 +424,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
     scripts/gen_scale_probe.py), and run the replication e2e at 10x.
     Emits per-key {base_sec, x10_sec, ratio} plus the 10x e2e rows and the
     ngram candidate-pair counts at both scales."""
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from scripts.gen_scale_probe import generate
 
     # default probe dir lives under the repo root (portable — ADVICE r4)
@@ -462,7 +460,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
         fn = queries[name]
         if tag == "x10_sec" and name in x10_overrides:
             fn = x10_overrides[name]
-        clear_caches(strategy_memo=False)
+        memo.clear()
         t0 = time.perf_counter()
         fn(spark, d).count()
         return time.perf_counter() - t0
@@ -496,7 +494,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
             )
             times["outlier_retried"] = True
         out["keys"][name] = times
-    clear_caches(strategy_memo=False)
+    memo.clear()
     try:
         out["pairs"] = _ngram_pair_counts(spark, sf_dir, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
@@ -519,7 +517,7 @@ def _scale_probe(spark, queries, sf_dir: str) -> dict:
         out["sink_restate"] = _sink_restate_probe(spark, sf_dir, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
         print(f"sink restate probe failed: {exc}", file=sys.stderr)
-    clear_caches(strategy_memo=False)
+    memo.clear()
     try:
         out["e2e_x10"] = _bench_replication_min(spark, probe_dir)
     except Exception as exc:  # noqa: BLE001 — probe rows are additive
@@ -572,8 +570,8 @@ def shrink_compact_line(compact: dict, limit: int = 1900) -> str:
 
 
 def _host_ticks() -> dict:
-    """Cheap host-state snapshot (the scripts/diag_outlier.py probes the
-    round-8 VERDICT asked to fold in): /proc/stat cpu ticks — STEAL is
+    """Cheap host-state snapshot (the timing-noise probes the round-8
+    VERDICT asked to fold in): /proc/stat cpu ticks — STEAL is
     the sharpest external-contention signal on this virtualized host —
     plus 1-minute loadavg. Empty dict on non-Linux."""
     out: dict = {}
@@ -695,12 +693,12 @@ def main() -> None:
     # are cleared at the start of each pass, so every pass pays the real
     # blocking/scoring cost; WITHIN a pass the cross-operator memoization
     # (ngram → clusters) applies, as it does in a production session.
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
 
     timings: dict[str, float] = {}
     contention: dict[str, dict] = {}
     for _pass in range(N_PASSES):
-        clear_caches(strategy_memo=False)
+        memo.clear()
         fp = _fingerprint_begin(spark)
         for name in HEADLINE:
             t0 = time.perf_counter()
@@ -722,9 +720,9 @@ def main() -> None:
     # work (cache-block removal issued by the clearCache above, task
     # teardown, GC) lands inside the e2e window — measured +17% phantom
     # CPU on identical e2e work in a quiet-window A/B/C isolation
-    # (scripts/diag_e2e_regression.py, round 12; the r11 committed +26%
+    # (round 12, docs/BENCH_NOTES.md; the r11 committed +26%
     # e2e fingerprint was exactly this adjacency plus 0.5% steal).
-    clear_caches(strategy_memo=False)
+    memo.clear()
     spark.catalog.clearCache()
     gc.collect()
     time.sleep(3)

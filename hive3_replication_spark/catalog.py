@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memo
 from .session import ensure_engine_confs
 
 #: Tables provided by the test fixtures (TESTDATA.md / FIXTURES.md).
@@ -36,30 +37,10 @@ _NANOS_TS_COLUMNS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
 }
 
-#: Inferred-schema memo: (table path, payload mtime_ns) → StructType.
-#: Schema INFERENCE (spark.read.parquet with no schema) launches a footer-
-#: read job per call — measured ~170 ms each, and operators load 2-7 tables
-#: per invocation, which made inference the single largest fixed cost of a
-#: bench pass (round-15 measurement). Supplying the memoized schema
-#: explicitly skips that job; the memo is METADATA only (never rows or
-#: results — every query still computes from the parquet inputs), and the
-#: mtime in the key invalidates it if a table payload is ever rewritten.
-#: Non-statable paths (remote URIs) skip the memo and infer as before.
-_SCHEMA_MEMO: dict[tuple[str, int], "object"] = {}
 
-#: Loaded-DataFrame memo: (session id, table path, payload mtime_ns) →
-#: (session, DataFrame). A DataFrame is an immutable LAZY PLAN — returning
-#: the same object for a repeated load is pure plan reuse (METADATA, like
-#: _SCHEMA_MEMO; no persist, no rows — every action still computes from
-#: the parquet inputs). Building the plan costs two eagerly-analyzed
-#: Dataset creations (~15-30 ms of JVM analysis); operators load 2-7
-#: tables per invocation and a bench pass makes a few hundred load_table
-#: calls, so this was the largest remaining per-call fixed cost after the
-#: round-15 schema memo. The value keeps a STRONG reference to the owning
-#: session so a collected session's id() can never alias a new session;
-#: the mtime key invalidates on payload rewrite exactly like the schema
-#: memo.
-_DF_MEMO: dict[tuple[int, str, int], tuple[SparkSession, DataFrame]] = {}
+def table_path(sf_dir: str, name: str) -> str:
+    """Where table ``name`` of the dataset at ``sf_dir`` lives."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -69,46 +50,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     proper TimestampType and can rely on Catalyst pushing filters into the
     parquet scan (the ns->us conversion is a projection, so pruning of other
     columns still reaches the reader).
-    """
-    import os
 
+    The inferred schema and the lazy plan are memoized per table identity
+    (``memo``): inference launches a footer-read job (~170 ms) and the
+    plan costs two eagerly analyzed Dataset creations (~15-30 ms), while
+    operators load 2-7 tables per call. Both are metadata only — every
+    action still reads the parquet inputs.
+    """
     from pyspark.sql.types import LongType
 
     ensure_engine_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    key = None
-    try:
-        key = (path, os.stat(path).st_mtime_ns)
-    except OSError:  # remote URI / unstatable — plain inference path
-        pass
-    if key is not None:
-        hit = _DF_MEMO.get((id(spark), *key))
-        if hit is not None:
-            return hit[1]
-    schema = _SCHEMA_MEMO.get(key) if key is not None else None
-    if schema is not None:
+    path = table_path(sf_dir, name)
+
+    def build_df() -> DataFrame:
+        schema = memo.get(
+            "schema", lambda: spark.read.parquet(path).schema,
+            inputs=[path], scope=path,
+        )
         df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        if key is not None:
-            # drop stale entries for the same path before inserting
-            for k in [k for k in _SCHEMA_MEMO if k[0] == path]:
-                del _SCHEMA_MEMO[k]
-            _SCHEMA_MEMO[key] = schema
-    for col in _NANOS_TS_COLUMNS.get(name, ()):
-        field = next((f for f in schema.fields if f.name == col), None)
-        if field is not None and isinstance(field.dataType, LongType):
-            # integer DIV, not `/`: ns-since-epoch (~1.7e18) exceeds double's
-            # 2^53 integer range, so float division would round the microsecond
-            df = df.withColumn(
-                col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000"))
-            )
-    if key is not None:
-        for k in [k for k in _DF_MEMO if k[0] == id(spark) and k[1] == path]:
-            del _DF_MEMO[k]
-        _DF_MEMO[(id(spark), *key)] = (spark, df)
-    return df
+        for col in _NANOS_TS_COLUMNS.get(name, ()):
+            field = next((f for f in schema.fields if f.name == col), None)
+            if field is not None and isinstance(field.dataType, LongType):
+                # integer DIV, not `/`: ns-since-epoch (~1.7e18) exceeds
+                # double's 2^53 integer range, so float division would
+                # round the microsecond
+                df = df.withColumn(
+                    col, F.timestamp_micros(F.expr(f"`{col}` DIV 1000"))
+                )
+        return df
+
+    # the value keeps its session alive, so the session id cannot alias
+    return memo.get(
+        "table", build_df, inputs=[path], scope=path, params=(id(spark),)
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -128,40 +102,23 @@ EMB_CLEAN_SUBQUERY = (
 )
 
 
-#: Embedding dimensionality memo, keyed like _SCHEMA_MEMO on (table path,
-#: payload mtime_ns). The vector width is STRUCTURAL metadata the parquet
-#: type system simply cannot carry for list columns (a fixed-width vector
-#: space's dim is schema-level information); probing it cost one Spark job
-#: (~120 ms) per operator call, three headline operators deep (round-15
-#: measurement). Rows never enter this memo and a rewritten payload
-#: re-probes via the mtime key.
-_DIM_MEMO: dict[tuple[str, int], int] = {}
-
-
 def embedding_dim(spark: SparkSession, sf_dir: str) -> int:
     """Dimensionality of the embeddings relation (length of the first
-    clean vector), memoized per (path, payload mtime). Consumers build
+    clean vector), memoized per table identity. Consumers build
     per-dimension expression lists from this, so it must be a driver-side
     int; the memo makes it one probe job per dataset per process instead
-    of one per operator invocation."""
-    import os
-
-    path = f"{sf_dir}/embeddings.parquet"
-    key = None
-    try:
-        key = (path, os.stat(path).st_mtime_ns)
-    except OSError:
-        pass
-    if key is not None:
-        hit = _DIM_MEMO.get(key)
-        if hit is not None:
-            return hit
-    dim = len(load_embeddings(spark, sf_dir).select("embedding").first()[0])
-    if key is not None:
-        for k in [k for k in _DIM_MEMO if k[0] == path]:
-            del _DIM_MEMO[k]
-        _DIM_MEMO[key] = dim
-    return dim
+    of one per operator invocation. Rows never enter the memo; the width
+    is structural metadata parquet cannot carry for list columns, and
+    probing it costs one Spark job (~120 ms)."""
+    path = table_path(sf_dir, "embeddings")
+    return memo.get(
+        "embedding_dim",
+        lambda: len(
+            load_embeddings(spark, sf_dir).select("embedding").first()[0]
+        ),
+        inputs=[path],
+        scope=path,
+    )
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,32 +136,23 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the relation (kmeans re-evaluates this subtree per unrolled
     iteration); identical in the SQL twin ``EMB_CLEAN_SUBQUERY``.
 
-    The cleaned plan is memoized like ``load_table``'s (_DF_MEMO — lazy
-    plan-object reuse, metadata only): eight vector operators re-derived
-    the identical filter per invocation."""
-    import os
+    The cleaned plan is memoized like ``load_table``'s (lazy plan-object
+    reuse, metadata only): eight vector operators re-derived the identical
+    filter per invocation."""
+    path = table_path(sf_dir, "embeddings")
 
-    path = f"{sf_dir}/embeddings.parquet"
-    key = None
-    try:
-        key = (id(spark), f"{path}#clean", os.stat(path).st_mtime_ns)
-    except OSError:
-        pass
-    if key is not None:
-        hit = _DF_MEMO.get(key)
-        if hit is not None:
-            return hit[1]
-    zero = F.lit(0.0).cast("float")
-    df = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") > 0)
-        & (
-            (F.array_max("embedding") != zero)
-            | (F.array_min("embedding") != zero)
+    def build() -> DataFrame:
+        zero = F.lit(0.0).cast("float")
+        return load_table(spark, sf_dir, "embeddings").where(
+            F.col("embedding").isNotNull()
+            & (F.size("embedding") > 0)
+            & (
+                (F.array_max("embedding") != zero)
+                | (F.array_min("embedding") != zero)
+            )
         )
+
+    return memo.get(
+        "embeddings_clean", build, inputs=[path], scope=path,
+        params=(id(spark),),
     )
-    if key is not None:
-        for k in [k for k in _DF_MEMO if k[0] == key[0] and k[1] == key[1]]:
-            del _DF_MEMO[k]
-        _DF_MEMO[key] = (spark, df)
-    return df

@@ -12,13 +12,11 @@ a parameter below).
 
 from __future__ import annotations
 
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_embeddings, load_table
+from .. import memo
+from ..catalog import load_embeddings, load_table, table_path
 from ..util import expr_memo, fan_out
 
 #: Drop blocking buckets larger than this before pairing (skew guard).
@@ -122,71 +120,16 @@ def _shingles(
     return with_toks.select("doc_id", F.explode(sh_array).alias("shingle"))
 
 
-#: Per-operator cache registry: each keyed persist replaces (and unpersists)
-#: the previous invocation's cache, so repeated driver/bench runs hold at
-#: most one cached relation per operator instead of leaking one per call.
-_CACHES: dict[str, DataFrame] = {}
-
-
-def _swap_cache(key: str, df: DataFrame) -> DataFrame:
-    prev = _CACHES.get(key)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    cached = df.persist()
-    _CACHES[key] = cached
-    return cached
-
-
-#: Memoized scored-pair relations: cache_key → ((token, max_bucket,
-#: min_jaccard), persisted DF). The token (the sf dir) scopes reuse to one
-#: corpus, and the blocking cap + policy threshold are part of the
-#: relation's identity; any parameter change swaps the cache. This is shared-subplan materialization:
-#: llm_dedup_ngram and llm_dedup_clusters consume the SAME pair relation,
-#: so within a session the expensive blocking join runs once, not per op.
-_PAIR_MEMO: dict[str, tuple[tuple[str, int, float], DataFrame]] = {}
-#: Guards memo lookup/store: the prewarm thread may build the pair relation
-#: concurrently with the first consuming operator.
-_PAIR_LOCK = threading.Lock()
-
-#: Signature-matrix memos (MinHash/SimHash), corpus-token-scoped like
-#: _PAIR_MEMO: n_docs × a-few-longs relations, tiny at any corpus scale,
-#: rebuilt whenever the corpus dir changes. Lets the prewarm thread pay the
-#: shingle→hash→groupBy cost before the sweep reaches the dedup keys.
-_SIG_MEMO: dict[str, tuple[str, DataFrame]] = {}
-
-
-def _memo_sig_locked(cache_key: str, token: str, build) -> DataFrame:
-    """``_memo_sig`` body for callers already holding ``_PAIR_LOCK``
-    (the lock is not re-entrant; memoized builders that consume OTHER
-    memoized relations — the shared shingle relation below — must use
-    this form)."""
-    hit = _SIG_MEMO.get(cache_key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    df = build().persist()
-    prev = _SIG_MEMO.pop(cache_key, None)
-    if prev is not None:
-        prev[1].unpersist(blocking=False)
-    _SIG_MEMO[cache_key] = (token, df)
-    return df
-
-
-def _memo_sig(cache_key: str, token: str, build) -> DataFrame:
-    """Memoized persisted relation keyed by (cache_key, corpus token)."""
-    with _PAIR_LOCK:
-        return _memo_sig_locked(cache_key, token, build)
-
-
-def _corpus_shingles_locked(documents: DataFrame, token: str) -> DataFrame:
+def _corpus_shingles(documents: DataFrame, sf_dir: str) -> DataFrame:
     """THE per-corpus distinct 3-shingle relation (doc_id, sz, shingle),
-    memoized under ``_PAIR_LOCK`` — shared by the ngram scorer AND the
-    MinHash signature build (optimization round 15, guide §1.2): both
-    previously tokenized + shingled the corpus independently per bench
-    pass. Sharing is exact for MinHash because per-permutation minima
-    are duplicate-insensitive — min over the per-doc DISTINCT shingle
-    set equals min over the multiset — and the ngram scorer consumed
-    exactly this with_size relation already. One narrow corpus pass per
-    session feeds both; ``clear_caches`` drops it with the other memos.
+    persisted in the memo — shared by the ngram scorer AND the MinHash
+    signature build (optimization round 15, guide §1.2): both previously
+    tokenized + shingled the corpus independently per bench pass. Sharing
+    is exact for MinHash because per-permutation minima are
+    duplicate-insensitive — min over the per-doc DISTINCT shingle set
+    equals min over the multiset — and the ngram scorer consumed exactly
+    this with_size relation already. One narrow corpus pass per session
+    feeds both; ``memo.clear`` drops it with the other relations.
 
     Storage note for the 100 TB deployment (same as the ngram scorer's
     long-standing note): the persist is a fixture-scale memo —
@@ -194,52 +137,12 @@ def _corpus_shingles_locked(documents: DataFrame, token: str) -> DataFrame:
     prefer recomputing the narrow tokenize+shingle map per consumer
     (pure CPU, no shuffle) and keep only the |near-dups|-sized scored
     pair memo across operators."""
-    return _memo_sig_locked(
-        "shingles_ws", token, lambda: _shingles(documents, with_size=True)
+    return memo.get(
+        "shingles_ws",
+        lambda: _shingles(documents, with_size=True),
+        inputs=[table_path(sf_dir, "documents")],
+        persist=True,
     )
-
-
-def clear_caches(strategy_memo: bool = True) -> None:
-    """Unpersist and forget all memoized relations (shingle caches, minhash
-    signatures, scored-pair memos). Benchmarks call this between timing
-    passes so each pass measures real work; within a pass the cross-operator
-    memoization (ngram → clusters → pipeline) applies as in production.
-
-    Runs under ``_PAIR_LOCK``: every other writer of these dicts holds it
-    (the builders), and clearing concurrently with a prewarm-thread build
-    would otherwise mutate a dict mid-iteration or strand a just-persisted
-    relation outside the memo.
-
-    ``strategy_memo``: by default also drops the A26 auto-strategy memo
-    (ADVICE r9 — keyed on the sf_dir path, so a dataset REPLACED at the
-    same path would otherwise keep a stale strategy). bench.py passes
-    False: the strategy memo is a PLAN-choice cache, not a relation
-    cache, and clearing it per timing pass would re-charge the eager
-    probe scan to every agg_weighted_median measurement — the exact
-    per-pass contamination the round-9 memoization removed."""
-    if strategy_memo:
-        # generation-bumping clear: an A26 probe in flight across this
-        # call cannot re-install its (stale-dataset) result afterwards
-        # (ADVICE r10 — plain dict.clear left that interleaving open)
-        from ..operators.aggregates import _wm_strategy_clear
-
-        _wm_strategy_clear()
-    # the unigram-EM memo is a RELATION cache like the ones below, so it
-    # clears on every call (not just strategy_memo) — cold bench passes
-    # must re-run the corpus pass + EM rounds, not hit the memo
-    from .text import unigram_clear
-
-    unigram_clear()
-    with _PAIR_LOCK:
-        for df in _CACHES.values():
-            df.unpersist(blocking=False)
-        _CACHES.clear()
-        for _, df in _PAIR_MEMO.values():
-            df.unpersist(blocking=False)
-        _PAIR_MEMO.clear()
-        for _, df in _SIG_MEMO.values():
-            df.unpersist(blocking=False)
-        _SIG_MEMO.clear()
 
 
 def _pair_expand(docs: F.Column) -> F.Column:
@@ -376,7 +279,7 @@ def ngram_pair_jaccard(
     documents: DataFrame,
     cache_key: str,
     max_bucket: int = MAX_BUCKET,
-    memo_token: str | None = None,
+    sf_dir: str | None = None,
     min_jaccard: float = NGRAM_MIN_JACCARD,
 ) -> DataFrame:
     """Shared exact n-gram Jaccard scorer: shingle-block candidate pairs →
@@ -390,10 +293,11 @@ def ngram_pair_jaccard(
     first shrinks the persisted memo by ~4000× (and at 100 TB keeps the
     cross-operator cache |near-dups|-sized instead of |candidates|-sized).
     Used by llm_dedup_ngram and the composed pipeline so the blocking/
-    threshold logic cannot drift between them. Pass ``memo_token``
-    (the corpus dir) to persist + reuse the scored pairs across operators.
-    Plan construction + memo swap run under ``_PAIR_LOCK`` (the prewarm
-    thread builds the same relation concurrently with the sweep).
+    threshold logic cannot drift between them. Pass ``sf_dir`` (the
+    corpus dir ``documents`` was loaded from) to persist + reuse the
+    scored pairs across operators; the memo key carries the documents
+    identity and both parameters, since min_jaccard/max_bucket are part
+    of the relation's identity.
 
     Storage note for the 100 TB deployment: the SHINGLE relation persist
     below is a test-scale optimization (it is referenced by the df count
@@ -403,37 +307,30 @@ def ngram_pair_jaccard(
     per consumer (pure CPU, no shuffle) or checkpointing to cheap object
     storage — the relation worth caching across OPERATORS is the scored
     pair memo, which is |candidate pairs|-sized."""
-    with _PAIR_LOCK:
-        return _ngram_pair_jaccard_locked(
-            documents, cache_key, max_bucket, memo_token, min_jaccard
-        )
+    if sf_dir is None:
+        # memo-bypassing callers (the bench pair-count probe) stage privately
+        sh = memo.swap(cache_key, _shingles(documents, with_size=True))
+        return _score_ngram_pairs(sh, max_bucket, min_jaccard)
+    return memo.get(
+        cache_key,
+        lambda: _score_ngram_pairs(
+            _corpus_shingles(documents, sf_dir), max_bucket, min_jaccard
+        ),
+        inputs=[table_path(sf_dir, "documents")],
+        params=(max_bucket, min_jaccard),
+        persist=True,
+    )
 
 
-def _ngram_pair_jaccard_locked(
-    documents: DataFrame,
-    cache_key: str,
-    max_bucket: int,
-    memo_token: str | None,
-    min_jaccard: float,
+def _score_ngram_pairs(
+    sh: DataFrame, max_bucket: int, min_jaccard: float
 ) -> DataFrame:
-    if memo_token is not None:
-        # memo validity = (corpus, blocking cap, policy threshold): a hit
-        # computed under different parameters must NOT be returned —
-        # min_jaccard/max_bucket are part of the relation's identity
-        hit = _PAIR_MEMO.get(cache_key)
-        if hit is not None and hit[0] == (memo_token, max_bucket, min_jaccard):
-            return hit[1]
     # Per-doc shingle counts (the Jaccard denominators) ride each exploded
     # row for free (with_size: size() of the per-doc array, fully narrow) —
     # this deletes the groupBy(doc_id) sizes aggregation AND both
     # |pairs|-sized post-scoring joins the previous formulation paid.
     # Memoized consumers share ONE corpus shingle relation with the
-    # MinHash signature build (optimization round 15); memo-bypassing
-    # callers (the bench pair-count probe) still stage privately.
-    if memo_token is not None:
-        sh = _corpus_shingles_locked(documents, memo_token)
-    else:
-        sh = _swap_cache(cache_key, _shingles(documents, with_size=True))
+    # MinHash signature build (optimization round 15).
     # Pair generation via grouped postings, not a self-join: one shuffle of
     # the (filtered) postings instead of two. The frequency pre-filter runs
     # FIRST (partial-agg exchange carries |vocab| rows) so a stop-shingle's
@@ -465,8 +362,7 @@ def _ngram_pair_jaccard_locked(
     n_shuf = int(
         sh_f.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    if not os.environ.get("H3R_NO_PINPART"):  # A/B kill-switch
-        sh_f = sh_f.repartition(n_shuf, "shingle")
+    sh_f = sh_f.repartition(n_shuf, "shingle")
     postings = sh_f.groupBy("shingle").agg(
         F.sort_array(
             F.collect_list(F.struct("doc_id", "sz"))
@@ -475,8 +371,8 @@ def _ngram_pair_jaccard_locked(
     pairs = postings.select(
         expr_memo(
             ("ngram_pair_explode",),
-            lambda: F.explode(_pair_expand_sized(F.col("docs"))).alias("p"),
-        )
+            lambda: F.explode(_pair_expand_sized(F.col("docs"))),
+        ).alias("p")
     ).select("p.doc_a", "p.doc_b", "p.sz_a", "p.sz_b")
     inter = pairs.groupBy("doc_a", "doc_b", "sz_a", "sz_b").agg(
         F.count("*").alias("inter")
@@ -484,18 +380,11 @@ def _ngram_pair_jaccard_locked(
     jac = F.col("inter").cast("double") / (
         F.col("sz_a") + F.col("sz_b") - F.col("inter")
     ).cast("double")
-    scored = (
+    return (
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "sz_a", "sz_b", "inter", "jaccard")
     )
-    if memo_token is not None:
-        prev = _PAIR_MEMO.pop(cache_key, None)
-        if prev is not None:
-            prev[1].unpersist(blocking=False)
-        scored = scored.persist()
-        _PAIR_MEMO[cache_key] = ((memo_token, max_bucket, min_jaccard), scored)
-    return scored
 
 
 def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,7 +411,7 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load_table(spark, sf_dir, "documents")
     return (
         # threshold applied INSIDE the scorer (NGRAM_MIN_JACCARD)
-        ngram_pair_jaccard(documents, "ngram_shingles", memo_token=sf_dir)
+        ngram_pair_jaccard(documents, "ngram_shingles", sf_dir=sf_dir)
         .select("doc_a", "doc_b", "inter", "jaccard")
     )
 
@@ -716,7 +605,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load_table(spark, sf_dir, "documents")
     pairs = (
         # threshold applied INSIDE the scorer (NGRAM_MIN_JACCARD)
-        ngram_pair_jaccard(documents, "ngram_shingles", memo_token=sf_dir)
+        ngram_pair_jaccard(documents, "ngram_shingles", sf_dir=sf_dir)
         .select("doc_a", "doc_b")
     )
     labels, _rounds = resolve_components(pairs)
@@ -846,9 +735,9 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
-    """(doc_id, sig: array<long>[32]) MinHash signatures, memoized per
-    corpus.
+def minhash_signatures(documents: DataFrame, sf_dir: str) -> DataFrame:
+    """(doc_id, sig: array<long>[32]) MinHash signatures of ``documents``
+    (loaded from ``sf_dir``), memoized per documents identity.
 
     distinct=False shingles: per-permutation minima are duplicate-
     insensitive, so the signature is identical and shingle generation
@@ -866,9 +755,8 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         # per-permutation minima are duplicate-insensitive, so the ngram
         # scorer's per-doc DISTINCT shingles yield the bit-identical
         # signature while the corpus is tokenized+shingled once per
-        # session instead of once per consumer (build() already runs
-        # under _PAIR_LOCK via _memo_sig).
-        sh = _corpus_shingles_locked(documents, token)
+        # session instead of once per consumer.
+        sh = _corpus_shingles(documents, sf_dir)
         # Base hash = first 8 hex chars of md5, mod Mersenne. md5 is a few
         # GB/s/core slower than xxhash64 but (a) the per-shingle cost is
         # string-overhead-dominated and (b) md5 is bit-identical in DuckDB
@@ -881,7 +769,7 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
         h = sh.select(
             "doc_id",
             expr_memo(
-                ("mh_base_hash",),
+                ("mh_base_hash", _MERSENNE),
                 lambda: F.explode(
                     F.array(
                         F.conv(
@@ -889,34 +777,35 @@ def minhash_signatures(documents: DataFrame, token: str) -> DataFrame:
                         ).cast("long")
                         % _MERSENNE
                     )
-                ).alias("h"),
-            ),
+                ),
+            ).alias("h"),
         )
         # constant trees (module-constant coefficients), ~110 ms per build
         perm_cols = expr_memo(
-            ("mh_perm_cols",),
+            ("mh_perm_cols", MINHASH_PERMS, _MERSENNE),
             lambda: [
-                F.min(
-                    (F.col("h") * _PERM_A[k] + _PERM_B[k]) % _MERSENNE
-                ).alias(f"mh{k}")
+                F.min((F.col("h") * _PERM_A[k] + _PERM_B[k]) % _MERSENNE)
                 for k in range(MINHASH_PERMS)
             ],
         )
         return (
             h.groupBy("doc_id")
-            .agg(*perm_cols)
+            .agg(*[c.alias(f"mh{k}") for k, c in enumerate(perm_cols)])
             .select(
                 "doc_id",
                 expr_memo(
-                    ("mh_sig_pack",),
+                    ("mh_sig_pack", MINHASH_PERMS),
                     lambda: F.array(
                         *[F.col(f"mh{k}") for k in range(MINHASH_PERMS)]
-                    ).alias("sig"),
-                ),
+                    ),
+                ).alias("sig"),
             )
         )
 
-    return _memo_sig("minhash_sig", token, build)
+    return memo.get(
+        "minhash_sig", build,
+        inputs=[table_path(sf_dir, "documents")], persist=True,
+    )
 
 
 def llm_dedup_minhash(
@@ -951,7 +840,7 @@ def llm_dedup_minhash(
 
     # constant trees (module-constant coefficients), ~130 ms per build
     band_structs = expr_memo(
-        ("mh_band_structs",),
+        ("mh_band_structs", MINHASH_PERMS, MINHASH_BANDS, _MERSENNE),
         lambda: [
             F.struct(
                 F.lit(bidx).alias("band"),
@@ -980,8 +869,7 @@ def llm_dedup_minhash(
     # agg map side ran twice per invocation). localCheckpoint it — the
     # _batch_candidates idiom; n_docs × bands rows — so the sig agg and
     # the band explode run once (alternating A/B: −0.55 s at sf0.1).
-    if not os.environ.get("H3R_NO_BANDCK"):  # A/B kill-switch
-        banded = banded.localCheckpoint()
+    banded = banded.localCheckpoint()
     # component-match count via zip_with over the packed arrays — one
     # narrow expression instead of 32 column equalities (plan width, not
     # execution, was the measured cost of the column form)
@@ -1018,8 +906,9 @@ def llm_dedup_minhash(
     )
 
 
-def simhash_signatures(documents: DataFrame, token: str) -> DataFrame:
-    """(doc_id, simhash) 32-bit SimHash relation, memoized per corpus —
+def simhash_signatures(documents: DataFrame, sf_dir: str) -> DataFrame:
+    """(doc_id, simhash) 32-bit SimHash relation of ``documents`` (loaded
+    from ``sf_dir``), memoized per documents identity —
     persisted because it is referenced by the band explode and both
     candidate-join sides; n_docs × 1 long, tiny at any corpus scale.
 
@@ -1046,11 +935,13 @@ def simhash_signatures(documents: DataFrame, token: str) -> DataFrame:
                         == 1,
                         F.col("w"),
                     ).otherwise(-F.col("w"))
-                ).alias(f"s{b}")
+                )
                 for b in range(32)
             ],
         )
-        agg = th.groupBy("doc_id").agg(*bit_sums)
+        agg = th.groupBy("doc_id").agg(
+            *[c.alias(f"s{b}") for b, c in enumerate(bit_sums)]
+        )
         return agg.select(
             "doc_id",
             expr_memo(
@@ -1060,11 +951,14 @@ def simhash_signatures(documents: DataFrame, token: str) -> DataFrame:
                         F.lit(0)
                     )
                     for b in range(32)
-                ).alias("simhash"),
-            ),
+                ),
+            ).alias("simhash"),
         )
 
-    return _memo_sig("simhash_sig", token, build)
+    return memo.get(
+        "simhash_sig", build,
+        inputs=[table_path(sf_dir, "documents")], persist=True,
+    )
 
 
 def llm_dedup_simhash(
@@ -1474,7 +1368,7 @@ def llm_dedup_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = (
         # threshold applied INSIDE the scorer (NGRAM_MIN_JACCARD)
-        ngram_pair_jaccard(docs, "ngram_shingles", memo_token=sf_dir)
+        ngram_pair_jaccard(docs, "ngram_shingles", sf_dir=sf_dir)
         .select("doc_a", "doc_b")
     )
     edges = pairs.unionByName(
@@ -1529,25 +1423,21 @@ def _sem_vectors(documents: DataFrame) -> DataFrame:
     # constant trees — ~300 ms of py4j construction per build (expr_memo:
     # round-16 driver cut)
     counts = expr_memo(
-        ("sem_counts",),
+        ("sem_counts", SEM_DIMS),
         lambda: [
-            F.sum(F.when(F.col("dim") == d, 1).otherwise(0))
-            .cast("double")
-            .alias(f"c{d}")
+            F.sum(F.when(F.col("dim") == d, 1).otherwise(0)).cast("double")
             for d in range(SEM_DIMS)
         ],
     )
     return (
         dims.groupBy("doc_id")
-        .agg(*counts)
+        .agg(*[c.alias(f"c{d}") for d, c in enumerate(counts)])
         .select(
             "doc_id",
             expr_memo(
-                ("sem_arr",),
-                lambda: F.array(
-                    *[F.col(f"c{d}") for d in range(SEM_DIMS)]
-                ).alias("x"),
-            ),
+                ("sem_arr", SEM_DIMS),
+                lambda: F.array(*[F.col(f"c{d}") for d in range(SEM_DIMS)]),
+            ).alias("x"),
         )
     )
 
@@ -1781,7 +1671,7 @@ def llm_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load_table(spark, sf_dir, "documents")
     pairs = (
         # threshold applied INSIDE the scorer (NGRAM_MIN_JACCARD)
-        ngram_pair_jaccard(documents, "ngram_shingles", memo_token=sf_dir)
+        ngram_pair_jaccard(documents, "ngram_shingles", sf_dir=sf_dir)
         .select("doc_a", "doc_b")
     )
     labels, _rounds = resolve_components(pairs)

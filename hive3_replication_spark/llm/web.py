@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from .. import memo
+from ..catalog import load_table, table_path
 
 #: Rank mass scale (micro-rank units) and damping in percent — integer
 #: PageRank: r₀ = _PR_SCALE, r_{k+1}(d) = (15·SCALE) DIV 100
@@ -307,9 +308,9 @@ def llm_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _domain_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(doms, edges) for the domain-authority graph, memoized + persisted
-    per sf_dir through dedup's ``_memo_sig`` seam (cleared by
-    ``llm.dedup.clear_caches`` like every other corpus-keyed relation).
+    """(doms, edges) for the domain-authority graph, persisted in the memo
+    per documents identity (released by ``memo.clear`` like every other
+    corpus-keyed relation).
     Without the persist, every DataFrame reuse across the two unrolled
     iterations re-expands the whole subtree — 27 corpus scans in the
     naive plan vs two here (one per cached relation).
@@ -322,7 +323,6 @@ def _domain_graph(
     map-side-combinable agg — the only corpus-sized shuffle; the
     single-row domain count rides a 1-row broadcast nested loop (the
     _bm25_score scalar-broadcast idiom)."""
-    from .dedup import _memo_sig
 
     def build_doms() -> DataFrame:
         # NULL provenance cannot be assigned a domain — dropped from the
@@ -349,7 +349,8 @@ def _domain_graph(
             "source",
         )
 
-    doms = _memo_sig("web_doms", sf_dir, build_doms)
+    docs_path = table_path(sf_dir, "documents")
+    doms = memo.get("web_doms", build_doms, inputs=[docs_path], persist=True)
 
     def build_edges() -> DataFrame:
         documents = load_table(spark, sf_dir, "documents")
@@ -372,7 +373,9 @@ def _domain_graph(
             F.count("*").alias("w")
         )
 
-    return doms, _memo_sig("web_edges", sf_dir, build_edges)
+    return doms, memo.get(
+        "web_edges", build_edges, inputs=[docs_path], persist=True
+    )
 
 
 def llm_domain_authority(spark: SparkSession, sf_dir: str) -> DataFrame:

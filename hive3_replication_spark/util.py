@@ -37,11 +37,7 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
-def fan_out(
-    df: DataFrame,
-    probe: DataFrame | None = None,
-    env_gate: str = "H3R_NO_FANOUT",
-) -> DataFrame:
+def fan_out(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to ``defaultParallelism`` when the
     (scan-rooted) ``probe`` relation yields fewer partitions than cores —
     the guard ``_shingles`` has always used, factored out (optimization
@@ -60,14 +56,10 @@ def fan_out(
     The probe's split count is memoized per probe OBJECT: ``.rdd`` costs
     a py4j plan conversion (~30-80 ms) per call, and probes are the
     catalog's memoized scan plans (one immutable object per (session,
-    path, payload mtime) — a rewritten table yields a NEW object, so the
+    table identity) — a rewritten table yields a NEW object, so the
     memo can never serve a stale count). The value holds a strong
     reference to the probe so a collected object's id() cannot alias.
     """
-    import os
-
-    if os.environ.get(env_gate):  # A/B kill-switch (profiling only)
-        return df
     probe = df if probe is None else probe
     sess = df.sparkSession
     par = sess.sparkContext.defaultParallelism
@@ -108,6 +100,13 @@ def expr_memo(key: tuple, build):
     rows, results, or runtime values — only trees built purely from
     module constants and fixed column names may be memoized (never a
     tree embedding query-specific data such as a collected vector).
+
+    Two rules keep a hit equal to a fresh build. The tree is UNALIASED:
+    an ``.alias()`` mints a Catalyst exprId, and a memoized one would
+    define the same exprId in every plan (and at several depths of one
+    k-means plan), so callers alias the returned tree at each call site.
+    The key names every module constant the tree reads (e.g.
+    ``("sem_counts", SEM_DIMS)``), so a changed constant misses.
 
     The tree holds py4j references into the driver JVM, which is
     per-process and outlives any individual SparkSession, so entries

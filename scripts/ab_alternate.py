@@ -1,13 +1,18 @@
 """Single-process ALTERNATING A/B for env-gated code variants (round 15).
 
 Runs each key N rounds of (A, B) back-to-back in one session — A = env
-vars set, B = env vars cleared — with dedup memos cleared before every
-measurement, reporting per-arm MIN. Alternation inside one process
+vars set, B = env vars cleared — with memoized relations cleared before
+every measurement, reporting per-arm MIN. Alternation inside one process
 neutralizes the machine-window drift that makes cross-process A/Bs on
 this host unreliable (±20% between runs minutes apart on identical code).
 
+The package itself reads no environment switch (a test enforces it), so
+an A/B runs on a working copy whose variant is gated by a temporary
+``os.environ.get("H3R_AB_VARIANT")`` check, removed once the result is
+recorded.
+
 Usage:
-  python scripts/ab_alternate.py --keys k1,k2 --env H3R_NO_FANOUT=1 \
+  python scripts/ab_alternate.py --keys k1,k2 --env H3R_AB_VARIANT=1 \
       [--rounds 3] [--sf DIR]
 """
 
@@ -29,7 +34,7 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     args = ap.parse_args()
 
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_queries
     from hive3_replication_spark.session import get_spark
 
@@ -51,7 +56,7 @@ def main() -> None:
         for arm in ("A", "B"):
             _set_env(env_kv, arm)
             for k in keys:
-                clear_caches(strategy_memo=False)
+                memo.clear()
                 t0 = time.perf_counter()
                 queries[k](spark, args.sf).count()
                 el = time.perf_counter() - t0

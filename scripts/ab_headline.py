@@ -32,7 +32,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import HEADLINE
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_queries
     from hive3_replication_spark.session import get_spark
 
@@ -52,7 +52,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     for _pass in range(args.passes):
-        clear_caches(strategy_memo=False)
+        memo.clear()
         for name in keys:
             t0 = time.perf_counter()
             queries[name](spark, args.sf).count()

@@ -34,7 +34,7 @@ def main() -> None:
     ap.add_argument("--out", default="/tmp/diag_stages.json")
     args = ap.parse_args()
 
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_queries
     from hive3_replication_spark.session import get_spark
 
@@ -58,7 +58,7 @@ def main() -> None:
 
     report: dict = {}
     for k in keys:
-        clear_caches(strategy_memo=False)
+        memo.clear()
         jobs_before = {j["jobId"] for j in _get(api, "/jobs")}
         spark.sparkContext.setJobDescription(f"diag:{k}")
         t0 = time.perf_counter()

@@ -438,7 +438,7 @@ def gen(seed: int, out: str) -> None:
 def main() -> int:
     import glob
 
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_oracles, build_queries
     from hive3_replication_spark.session import get_spark
     from tests.conftest import assert_frames_match
@@ -457,7 +457,7 @@ def main() -> int:
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
         bad = []
         for key in q:
-            clear_caches()
+            memo.clear()
             try:
                 assert_frames_match(
                     q[key](spark, sf).toPandas(), con.sql(o[key]).df(), key

@@ -243,7 +243,7 @@ def main() -> None:
         )
 
     from bench import SCALE_PROBE_KEYS
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_oracles, build_queries
     from tests.conftest import assert_frames_match
 
@@ -322,7 +322,7 @@ def main() -> None:
                 indent=1,
             )
         )
-    clear_caches()
+    memo.clear()
     n_pass = sum(1 for r in results.values() if r["pass"])
     n_skip = sum(1 for r in results.values() if r["pass"] is None)
     summary = {

@@ -128,24 +128,24 @@ _MEMOIZED = {
     "llm_dedup_simhash",
     "llm_dedup_clusters",
     "llm_domain_authority",  # persisted domain/edge relations (web.py)
-    "llm_unigram_apply",  # persisted vocab/model state (text.py _UNI_MEMO)
+    "llm_unigram_apply",  # persisted vocab/model state (memo "unigram" slot)
 }
 
 
 @pytest.mark.parametrize("key", FLOAT_HEAVY)
 def test_partition_count_invariance(spark, key):
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
 
     q = build_queries()[key]
     original = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         if key in _MEMOIZED:
-            clear_caches()
+            memo.clear()
         few = q(spark, SF_DIR).toPandas()
         spark.conf.set("spark.sql.shuffle.partitions", "37")
         if key in _MEMOIZED:
-            clear_caches()
+            memo.clear()
         many = q(spark, SF_DIR).toPandas()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", original)

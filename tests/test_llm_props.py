@@ -479,9 +479,9 @@ def test_ngram_jaccard_equals_bruteforce(spark, tmp_path):
     import itertools
     import random
 
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.dedup import (
         NGRAM_MIN_JACCARD,
-        clear_caches,
         ngram_pair_jaccard,
     )
 
@@ -512,7 +512,7 @@ def test_ngram_jaccard_equals_bruteforce(spark, tmp_path):
         if jac >= NGRAM_MIN_JACCARD:
             expected[(a, b)] = (inter, len(sets[a]), len(sets[b]), jac)
 
-    clear_caches()
+    memo.clear()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {
         (r["doc_a"], r["doc_b"]): (
@@ -523,7 +523,7 @@ def test_ngram_jaccard_equals_bruteforce(spark, tmp_path):
         )
         for r in ngram_pair_jaccard(docs, "bruteforce_probe").collect()
     }
-    clear_caches()
+    memo.clear()
     assert set(got) == set(expected), (
         set(got) ^ set(expected)
     )
@@ -543,6 +543,7 @@ def test_minhash_equals_python_twin(spark, tmp_path):
     import itertools
     import random
 
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.dedup import (
         _BAND_C,
         _MERSENNE,
@@ -550,7 +551,6 @@ def test_minhash_equals_python_twin(spark, tmp_path):
         _PERM_B,
         MINHASH_BANDS,
         MINHASH_PERMS,
-        clear_caches,
         llm_dedup_minhash,
     )
 
@@ -614,12 +614,12 @@ def test_minhash_equals_python_twin(spark, tmp_path):
             if est >= 0.25:
                 expected[(a, b)] = est
 
-    clear_caches()
+    memo.clear()
     got = {
         (row["doc_a"], row["doc_b"]): row["est_jaccard"]
         for row in llm_dedup_minhash(spark, sf_dir).collect()
     }
-    clear_caches()
+    memo.clear()
     assert got == expected, set(got) ^ set(expected)
 
 
@@ -708,9 +708,9 @@ def test_simhash_equals_python_twin(spark, tmp_path):
     import random
     from collections import Counter
 
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.dedup import (
         MAX_BUCKET,
-        clear_caches,
         llm_dedup_simhash,
     )
 
@@ -756,12 +756,12 @@ def test_simhash_equals_python_twin(spark, tmp_path):
             if ham <= 6:
                 expected[(a, b)] = ham
 
-    clear_caches()
+    memo.clear()
     got = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in llm_dedup_simhash(spark, sf_dir).collect()
     }
-    clear_caches()
+    memo.clear()
     assert got == expected, set(got) ^ set(expected)
 
 
@@ -824,15 +824,13 @@ def test_minhash_clusters_group_planted_dups(spark, tmp_path):
     """llm_dedup_minhash_clusters: each planted near-dup pair (d, d+10000)
     must resolve into ONE cluster with the original doc as the canonical
     keeper (keep-min-id), for the vast majority of pairs (LSH recall)."""
-    from hive3_replication_spark.llm.dedup import (
-        clear_caches,
-        llm_dedup_minhash_clusters,
-    )
+    from hive3_replication_spark import memo
+    from hive3_replication_spark.llm.dedup import llm_dedup_minhash_clusters
 
     sf_dir = _dup_corpus(spark, tmp_path)
-    clear_caches()
+    memo.clear()
     out = llm_dedup_minhash_clusters(spark, sf_dir).toPandas()
-    clear_caches()
+    memo.clear()
     label = dict(zip(out.doc_id, out.cluster_id))
     same = sum(
         label.get(d) is not None and label.get(d) == label.get(d + 10000)
@@ -940,17 +938,15 @@ def test_lttb_small_series_pass_through(spark, tmp_path):
     assert big.x.is_monotonic_increasing
 
 
-def test_memo_build_vs_clear_caches_race(spark, tmp_path):
-    """clear_caches vs a concurrent memo build (the prewarm thread's shape,
-    round 8): interleaving clears with builds must never crash (pre-fix:
-    un-locked dict iteration could hit 'dict changed size') and every
-    build must return the same correct pair count."""
+def test_memo_build_vs_clear_race(spark, tmp_path):
+    """memo.clear vs concurrent memo builds: interleaving clears with
+    builds must never crash (an un-locked iteration of the store could
+    hit 'dict changed size') and every build must return the same
+    correct pair count."""
     import threading
 
-    from hive3_replication_spark.llm.dedup import (
-        clear_caches,
-        ngram_pair_jaccard,
-    )
+    from hive3_replication_spark import memo
+    from hive3_replication_spark.llm.dedup import ngram_pair_jaccard
 
     rng = __import__("random").Random(8)
     vocab = [f"w{i}" for i in range(10)]
@@ -964,9 +960,9 @@ def test_memo_build_vs_clear_caches_race(spark, tmp_path):
     ).write.parquet(f"{sf_dir}/documents.parquet")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    clear_caches()
+    memo.clear()
     expected = ngram_pair_jaccard(
-        docs, "race_probe", memo_token=sf_dir, min_jaccard=0.0
+        docs, "race_probe", sf_dir=sf_dir, min_jaccard=0.0
     ).count()
     errors: list[BaseException] = []
     counts: list[int] = []
@@ -975,7 +971,7 @@ def test_memo_build_vs_clear_caches_race(spark, tmp_path):
     def clearer() -> None:
         try:
             while not stop.is_set():
-                clear_caches()
+                memo.clear()
         except BaseException as exc:  # noqa: BLE001 — the assertion target
             errors.append(exc)
 
@@ -984,7 +980,7 @@ def test_memo_build_vs_clear_caches_race(spark, tmp_path):
             for _ in range(6):
                 counts.append(
                     ngram_pair_jaccard(
-                        docs, "race_probe", memo_token=sf_dir, min_jaccard=0.0
+                        docs, "race_probe", sf_dir=sf_dir, min_jaccard=0.0
                     ).count()
                 )
         except BaseException as exc:  # noqa: BLE001
@@ -1000,7 +996,7 @@ def test_memo_build_vs_clear_caches_race(spark, tmp_path):
     stop.set()
     for t in threads[:2]:
         t.join()
-    clear_caches()
+    memo.clear()
     assert not errors, errors
     assert counts and all(c == expected for c in counts), (expected, counts)
 
@@ -1188,12 +1184,13 @@ def test_preference_pairs_invariants_and_twin(spark):
 def test_ann_index_build_race_single_layout(spark, monkeypatch):
     """round-9 race coverage (VERDICT ask #6): N simultaneous cold-cache
     callers of ann_index_path must build the cell-partitioned layout
-    EXACTLY once per cold start (the _INDEX_LOCK seam the prewarm thread
-    shares with probes), agree on the path, and leave the probe operator
+    EXACTLY once per cold start (the memo's per-slot build lock), agree
+    on the path, and leave the probe operator
     returning its normal result. 10 repetitions — the round-8 takeover
     bug only failed ~1 in 3 runs."""
     import threading
 
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm import similarity as sim
 
     builds: list[str] = []
@@ -1206,8 +1203,7 @@ def test_ann_index_build_race_single_layout(spark, monkeypatch):
 
     monkeypatch.setattr(sim, "scratch_dir", counting_scratch)
     for _rep in range(10):
-        with sim._INDEX_LOCK:
-            sim._INDEX_CACHE.pop(SF_DIR, None)
+        memo._STORE.pop(("layout_ivf", SF_DIR), None)
         builds.clear()
         paths: list[str] = []
         errors: list[BaseException] = []
@@ -1370,7 +1366,7 @@ def test_unigram_apply_equals_python_twin(spark, tmp_path):
     genuinely uncovered words)."""
     import random
 
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.text import (
         _UNI_WORD_CAP,
         _unigram_train,
@@ -1399,7 +1395,7 @@ def test_unigram_apply_equals_python_twin(spark, tmp_path):
         )
     ).write.parquet(f"{sf_dir}/documents.parquet")
 
-    clear_caches()
+    memo.clear()
     _, model, _ = _unigram_train(spark, sf_dir)
     p = {r["s"]: int(r["p"]) for r in model.collect()}
     got = {
@@ -1410,7 +1406,7 @@ def test_unigram_apply_equals_python_twin(spark, tmp_path):
         )
         for r in llm_unigram_apply(spark, sf_dir).collect()
     }
-    clear_caches()
+    memo.clear()
 
     def n_tokens(w: str) -> int:
         if len(w) > _UNI_WORD_CAP:

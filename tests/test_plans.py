@@ -408,19 +408,17 @@ def test_ngram_scorer_three_exchanges_no_size_joins(spark):
     rows, so the whole scorer is exactly 3 hash exchanges (vocab df count,
     filtered postings groupBy, pair groupBy) and ONE join (the df
     pre-filter) — no |pairs|-sized size joins after scoring, ever."""
+    from hive3_replication_spark import memo
     from hive3_replication_spark.catalog import load_table
-    from hive3_replication_spark.llm.dedup import (
-        clear_caches,
-        ngram_pair_jaccard,
-    )
+    from hive3_replication_spark.llm.dedup import ngram_pair_jaccard
 
     # drop any persisted shingle relation from earlier tests: Spark's
     # CacheManager substitutes cached plans BY PLAN MATCH, which would
     # swap InMemoryTableScan nodes into this plan and skew the counts
-    clear_caches()
+    memo.clear()
     docs = load_table(spark, SF_DIR, "documents")
     plan = _plan(ngram_pair_jaccard(docs, "plan_gate_probe"), "simple")
-    clear_caches()
+    memo.clear()
     assert plan.count("Exchange hashpartitioning") == 3, plan
     assert plan.count("Join") == 1, plan
     assert "CartesianProduct" not in plan
@@ -431,9 +429,10 @@ def test_minhash_pipeline_no_cartesian_no_size_blowup(spark):
     signature scoring must plan with equi-joins only (no cartesian / no
     nested-loop over the corpus) — the zip_with compare rides the
     candidate join, it never widens the plan back to 32 columns."""
-    from hive3_replication_spark.llm.dedup import clear_caches, llm_dedup_minhash
+    from hive3_replication_spark import memo
+    from hive3_replication_spark.llm.dedup import llm_dedup_minhash
 
-    clear_caches()
+    memo.clear()
     plan = _plan(llm_dedup_minhash(spark, SF_DIR), "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -448,11 +447,12 @@ def test_minhash_distinct_carries_scores_not_signatures(spark):
     per row) through an array-keyed aggregate. The formatted plan's
     distinct exchange therefore partitions on exactly those three
     columns and no sig_a/sig_b may appear at or above it."""
-    from hive3_replication_spark.llm.dedup import clear_caches, llm_dedup_minhash
+    from hive3_replication_spark import memo
+    from hive3_replication_spark.llm.dedup import llm_dedup_minhash
 
-    clear_caches()
+    memo.clear()
     plan = _plan(llm_dedup_minhash(spark, SF_DIR))
-    clear_caches()
+    memo.clear()
     ex_lines = [
         line
         for line in plan.splitlines()
@@ -470,16 +470,14 @@ def test_ngram_postings_exchange_not_coalescable(spark):
     INPUT bytes, but this stage's work is OUTPUT-proportional, and
     letting the coalescer shrink it to input-sized task counts measured
     a 3-task straggler stage holding 4.2 s of CPU at sf0.1."""
+    from hive3_replication_spark import memo
     from hive3_replication_spark.catalog import load_table
-    from hive3_replication_spark.llm.dedup import (
-        clear_caches,
-        ngram_pair_jaccard,
-    )
+    from hive3_replication_spark.llm.dedup import ngram_pair_jaccard
 
-    clear_caches()
+    memo.clear()
     docs = load_table(spark, SF_DIR, "documents")
     plan = _plan(ngram_pair_jaccard(docs, "plan_gate_pin_probe"))
-    clear_caches()
+    memo.clear()
     pinned = [
         line
         for line in plan.splitlines()
@@ -940,12 +938,12 @@ def test_domain_authority_broadcast_rank_iterations(spark):
     vector) with a PARTIAL sum before its one exchange — the corpus is
     never rescanned or shuffled by an iteration, and no sort-merge or
     cartesian appears anywhere."""
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.web import llm_domain_authority
 
-    clear_caches()
+    memo.clear()
     plan = _plan(llm_domain_authority(spark, SF_DIR), "simple")
-    clear_caches()
+    memo.clear()
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     # the top-level section (before the cached edge relation's stored
@@ -962,14 +960,14 @@ def test_domain_graph_edge_build_single_corpus_scan(spark):
     one documents scan, broadcast attach of the cached domain-id relation,
     the 1-row domain-count broadcast (the _bm25_score scalar idiom is the
     only nested-loop join), and a partially-aggregated edge groupBy."""
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.llm.web import _domain_graph
 
-    clear_caches()
+    memo.clear()
     _, edges = _domain_graph(spark, SF_DIR)
     plan = _plan(edges, "formatted")
     simple = _plan(edges, "simple")
-    clear_caches()
+    memo.clear()
     # exactly ONE executed corpus scan, pruned to (doc_id, lang, source);
     # further FileScan lines in the simple text are the cached domain
     # relation's ECHOED build plan (filled once), which reads doc_id never

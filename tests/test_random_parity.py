@@ -120,11 +120,11 @@ def _random_corpus(spark, tmp_path_factory, seed: int) -> tuple[str, object]:
 @pytest.mark.parametrize("seed", _SEEDS)
 @pytest.mark.parametrize("key", KEYS)
 def test_random_corpus_parity(spark, tmp_path_factory, key, seed):
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_oracles, build_queries
 
     sf_dir, con = _random_corpus(spark, tmp_path_factory, seed)
-    clear_caches()  # memos are corpus-keyed, but start each key clean
+    memo.clear()  # memos are corpus-keyed, but start each key clean
     spark_pdf = build_queries()[key](spark, sf_dir).toPandas()
     oracle_pdf = con.sql(build_oracles()[key]).df()
     assert_frames_match(spark_pdf, oracle_pdf, f"{key}@seed{seed}")
@@ -547,7 +547,7 @@ def test_degenerate_boilerplate_corpus(spark, tmp_path_factory):
     behavior cross-engine (C(200,2) pairs must enumerate identically)."""
     import numpy as np
 
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_oracles, build_queries
 
     rng = np.random.RandomState(3)
@@ -583,12 +583,12 @@ def test_degenerate_boilerplate_corpus(spark, tmp_path_factory):
         # 200 — the whole duplicate block's text must strip to empty
         "llm_line_boilerplate",
     ):
-        clear_caches()
+        memo.clear()
         assert_frames_match(
             q[key](spark, out).toPandas(), con.sql(o[key]).df(), key
         )
     # the 200-clique enumerates completely (bucket of 200 < the 1000 cap)
-    clear_caches()
+    memo.clear()
     assert q["llm_dedup_minhash"](spark, out).count() >= 200 * 199 // 2
 
 
@@ -650,14 +650,14 @@ def test_domain_authority_null_provenance(spark, tmp_path_factory):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{out}/documents.parquet/*.parquet'"
     )
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from hive3_replication_spark.registry import build_oracles, build_queries
 
-    clear_caches()
+    memo.clear()
     key = "llm_domain_authority"
     spark_pdf = build_queries()[key](spark, out).toPandas()
     oracle_pdf = con.sql(build_oracles()[key]).df()
-    clear_caches()
+    memo.clear()
     assert_frames_match(spark_pdf, oracle_pdf, f"{key}@null-prov")
     # only fully-labeled (lang, source) pairs form domains; no NULL or
     # partially-concatenated host may appear

@@ -314,17 +314,16 @@ def test_weighted_median_auto_dispatch_and_nulls(spark, monkeypatch):
 
 
 def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
-    """Round-10 race target (VERDICT r9 ask #4 + ADVICE r9): the A26
-    strategy memo under concurrent FIRST callers — 8 threads race
-    agg_weighted_median plan construction on a cold cache, 10 reps.
-    Racing callers may duplicate the probe (benign, bounded by the
-    thread count) but must converge on ONE stored value; once warm, no
-    caller may probe again; and a clear_caches() interleaved with
-    builders must never corrupt the dict or strand a torn entry."""
+    """The A26 strategy memo under concurrent FIRST callers — 8 threads
+    race agg_weighted_median plan construction on a cold memo, 10 reps.
+    The memo's per-slot build lock makes them probe exactly once and
+    agree on one stored value; once warm, no caller may probe again; and
+    memo.clear() interleaved with builders must neither fail them nor
+    drop the strategy (it is a plan choice, not a persisted relation)."""
     import threading
 
     import hive3_replication_spark.operators.aggregates as aggs
-    from hive3_replication_spark.llm.dedup import clear_caches
+    from hive3_replication_spark import memo
     from tests.conftest import SF_DIR
 
     # agg_weighted_median imports the probe inside the function body, so
@@ -340,9 +339,10 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(skew, "weighted_median_strategy", counting)
+    slot = ("wm_strategy", SF_DIR)
 
     for rep in range(10):
-        aggs._WM_STRATEGY_CACHE.clear()
+        memo._STORE.pop(slot, None)
         probes.clear()
         errors: list[Exception] = []
         barrier = threading.Barrier(8)
@@ -358,21 +358,16 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
         for t in threads:
             t.start()
         for t in threads:
-            t.join()
+            t.join(60)
+        assert not any(t.is_alive() for t in threads), rep
         assert not errors, (rep, errors)
-        assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}, (
-            rep, aggs._WM_STRATEGY_CACHE,
-        )
-        assert 1 <= len(probes) <= 8 and set(probes) == {"exact"}, (
-            rep, probes,
-        )
+        assert memo._STORE[slot].value == "exact", rep
+        assert probes == ["exact"], (rep, probes)
         # warm path: no further probe
-        n = len(probes)
         aggs.agg_weighted_median(spark, SF_DIR)
-        assert len(probes) == n, "warm caller re-ran the probe"
+        assert probes == ["exact"], "warm caller re-ran the probe"
 
-    # clear_caches vs concurrent builders: the memo is cleared through the
-    # same seam the dedup memos use; builders mid-flight just re-probe
+    # memo.clear vs concurrent builders
     stop = threading.Event()
     errors2: list[Exception] = []
 
@@ -388,81 +383,69 @@ def test_wm_strategy_cache_concurrent_first_callers(spark, monkeypatch):
     for t in workers:
         t.start()
     for _ in range(20):
-        clear_caches()
+        memo.clear()
     stop.set()
     for t in workers:
-        t.join()
+        t.join(60)
+    assert not any(t.is_alive() for t in workers)
     assert not errors2, errors2
-    assert set(aggs._WM_STRATEGY_CACHE.values()) <= {"exact"}
+    assert memo._STORE[slot].value == "exact"
+    assert probes == ["exact"], "clear() dropped the strategy memo"
 
 
-def test_wm_strategy_generation_stamp_blocks_stale_install(spark, monkeypatch):
-    """Round-12 race target (VERDICT r11 ask #6): the GENERATION stamp on
-    the A26 memo lock — a probe that was in flight when clear_caches()
-    invalidated the memo must NOT install its (possibly stale-dataset)
-    result, while still returning a usable strategy to its caller; the
-    next cold caller must re-probe and install fresh. Deterministic gate:
-    the probe is frozen mid-flight, the invalidation lands, the probe is
-    released — then the same interleaving WITHOUT an invalidation must
-    install (the stamp may only block genuinely raced installs)."""
+def test_wm_strategy_rewrite_mid_probe_not_served(
+    spark, monkeypatch, tmp_path
+):
+    """A probe in flight while lineitem is rewritten at the same path
+    installs under the identity it started from, so the next caller sees
+    a new identity and probes again instead of reusing a plan choice read
+    from the replaced table. Deterministic gate: the probe is frozen
+    mid-flight, the rewrite lands, the probe is released. The same
+    interleaving WITHOUT a rewrite must serve the memo (control)."""
+    import os
+    import shutil
     import threading
 
     import hive3_replication_spark.operators.aggregates as aggs
     import hive3_replication_spark.operators.skew as skew
     from tests.conftest import SF_DIR
 
+    sf_dir = str(tmp_path)
+    li = os.path.join(sf_dir, "lineitem.parquet")
+    shutil.copy(os.path.join(SF_DIR, "lineitem.parquet"), li)
+
     real = skew.weighted_median_strategy
     probing = threading.Event()
     release = threading.Event()
-    gate_on = {"v": True}
+    probes = []
 
     def gated(df, key, value_col):
-        if gate_on["v"]:
+        probes.append(1)
+        if len(probes) == 1:
             probing.set()
             assert release.wait(30)
         return real(df, key, value_col)
 
     monkeypatch.setattr(skew, "weighted_median_strategy", gated)
 
-    for rep in range(5):
-        aggs._WM_STRATEGY_CACHE.clear()
+    def rewrite() -> None:
+        st = os.stat(li)
+        os.utime(li, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+
+    for rewritten in (True, False):
+        probes.clear()
         probing.clear()
         release.clear()
-        gate_on["v"] = True
-        errors: list[Exception] = []
-
-        def build() -> None:
-            try:
-                aggs.agg_weighted_median(spark, SF_DIR)
-            except Exception as exc:  # noqa: BLE001
-                errors.append(exc)
-
-        t = threading.Thread(target=build)
+        rewrite()  # fresh identity: the first caller below is cold
+        t = threading.Thread(
+            target=aggs.agg_weighted_median, args=(spark, sf_dir)
+        )
         t.start()
-        assert probing.wait(30)         # probe is in flight
-        aggs._wm_strategy_clear()       # invalidation lands mid-probe
+        assert probing.wait(30)  # probe is in flight
+        if rewritten:
+            rewrite()
         release.set()
         t.join(30)
-        assert not t.is_alive() and not errors, (rep, errors)
-        # the raced probe must NOT have installed
-        assert aggs._WM_STRATEGY_CACHE == {}, (rep, aggs._WM_STRATEGY_CACHE)
-        # a fresh caller re-probes and installs (no gate this time)
-        gate_on["v"] = False
-        aggs.agg_weighted_median(spark, SF_DIR)
-        assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}, rep
-
-    # control: the SAME gated interleaving without an invalidation must
-    # install — proving the stamp only blocks genuinely raced installs
-    aggs._WM_STRATEGY_CACHE.clear()
-    probing.clear()
-    release.clear()
-    gate_on["v"] = True
-    t = threading.Thread(
-        target=lambda: aggs.agg_weighted_median(spark, SF_DIR)
-    )
-    t.start()
-    assert probing.wait(30)
-    release.set()                       # no clear between probe & install
-    t.join(30)
-    assert not t.is_alive()
-    assert aggs._WM_STRATEGY_CACHE == {SF_DIR: "exact"}
+        assert not t.is_alive()
+        aggs.agg_weighted_median(spark, sf_dir)
+        assert len(probes) == (2 if rewritten else 1), (rewritten, probes)
