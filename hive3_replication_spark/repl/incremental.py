@@ -32,7 +32,14 @@ from ..catalog import load_table
 from ..session import ensure_engine_confs
 from ..util import rows_df
 from .model import MANIFEST_SCHEMA, ReplConfig
-from .snapshot import EVENTS_TABLE, MANIFEST_FILE, advance_watermark
+from .snapshot import (
+    EVENTS_TABLE,
+    MANIFEST_FILE,
+    advance_watermark,
+    parquet_int64_max,
+    parquet_row_count,
+    read_manifest_row,
+)
 
 #: Event types that delete the key's state on replay (DDL DROP analog).
 DELETE_TYPES = ("error",)
@@ -55,8 +62,6 @@ def incremental_dump(
     # optimization round 15): the global max IS the delta max whenever it
     # exceeds from_txid, and a global max at-or-below from_txid means an
     # empty delta. Payloads without stats fall back to the Spark job.
-    from .snapshot import parquet_int64_max
-
     dump_txid: int | None = None
     try:
         dump_txid = parquet_int64_max(
@@ -89,8 +94,6 @@ def incremental_dump(
     manifest.coalesce(1).write.mode("overwrite").parquet(
         f"{dump_path}/{MANIFEST_FILE}"
     )
-    from .snapshot import parquet_row_count
-
     return {
         "dump_path": dump_path,
         "dump_txid": int(dump_txid),
@@ -118,8 +121,6 @@ def read_state(
         ev = spark.read.parquet(str(boot_events)).filter(
             F.col("event_id") <= F.lit(version)
         )
-        if dict(ev.dtypes).get("ts") == "bigint":  # ns-as-long passthrough
-            pass  # ts unused below; no normalization needed
         latest = ev.groupBy("user_id").agg(
             F.max_by(
                 F.struct(
@@ -158,8 +159,6 @@ def apply_events(
     assert this).
     """
     ensure_engine_confs(spark)
-    from .snapshot import read_manifest_row
-
     manifest = read_manifest_row(spark, dump_path)
     dump_txid = manifest["dump_txid"]
     wm = current_wm if current_wm is not None else -1

@@ -21,6 +21,7 @@ import datetime as dt
 import json
 import logging
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -76,46 +77,22 @@ def export_run_log(cfg: ReplConfig, report: dict) -> str | None:
         )
         return None
     stamp = dt.datetime.now(dt.timezone.utc).strftime("%Y%m%dT%H%M%S_%f")
-    # O_EXCL exclusive create with a collision suffix: two concurrent
-    # exporters (threads or processes) can land on the SAME microsecond
-    # stamp, and plain open('w') would interleave both JSON bodies into
-    # one corrupt artifact (round-9 race test finding) — each writer must
-    # own its file exclusively.
-    path = None
-    fd = None
-    for attempt in range(100):
-        suffix = "" if attempt == 0 else f"-{attempt}"
-        candidate = os.path.join(
-            cfg.log_upload_dir, f"replog_{cfg.db_name}_{stamp}{suffix}.json"
-        )
-        try:
-            fd = os.open(
-                candidate, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644
-            )
-            path = candidate
-            break
-        except FileExistsError:
-            continue
-        except OSError as exc:  # upload failure must not fail the run
-            logging.error(
-                "run-log upload to %r failed: %s (misc_functions.sh:140-142)",
-                candidate,
-                exc,
-            )
-            return None
-    if fd is None or path is None:
-        logging.error(
-            "run-log upload to %r failed: 100 same-stamp collisions",
-            cfg.log_upload_dir,
-        )
-        return None
+    # exclusive create under a random suffix: concurrent exporters can land
+    # on the SAME microsecond stamp, and a shared path would interleave two
+    # JSON bodies into one corrupt artifact
     try:
+        fd, path = tempfile.mkstemp(
+            prefix=f"replog_{cfg.db_name}_{stamp}_",
+            suffix=".json",
+            dir=cfg.log_upload_dir,
+        )
         with os.fdopen(fd, "w", encoding="utf-8") as f:
+            os.fchmod(fd, 0o644)  # mkstemp creates 0o600
             json.dump(report, f, default=str, indent=1)
     except OSError as exc:  # upload failure must not fail the run
         logging.error(
             "run-log upload to %r failed: %s (misc_functions.sh:140-142)",
-            path,
+            cfg.log_upload_dir,
             exc,
         )
         return None

@@ -34,6 +34,12 @@ MANIFEST_FILE = "_manifest"
 VIEWS_FILE = "_views.json"
 #: The change-stream table that defines the consistent cut (DUMP_TXID).
 EVENTS_TABLE = "events"
+#: The managed tables: the only ones the bootstrap dump replicates by
+#: default and the only names drop replay may ever delete at the target
+#: (never the events transport, state versions or watermarks).
+MANAGED_TABLES = frozenset(
+    {"region", "nation", "customer", "supplier", "part", "orders", "lineitem"}
+)
 
 #: View definitions replicated as metadata (README.md:4: "managed, external
 #: tables and views"). Views are SQL text in the dump, recreated at load —
@@ -231,11 +237,7 @@ def source_tables(cfg: ReplConfig) -> list[str]:
         return present
     # only MANAGED tables replicate by default; the events stream always
     # rides along (it is the replication transport itself)
-    managed = {
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem",
-    }
-    return [t for t in present if t in managed or t == EVENTS_TABLE]
+    return [t for t in present if t in MANAGED_TABLES or t == EVENTS_TABLE]
 
 
 def table_fingerprints(root: str) -> dict[str, tuple]:
@@ -293,13 +295,6 @@ def sync_static_tables(
     return copied
 
 
-#: Names the drop-replay may ever touch at the target: replicated managed
-#: tables only — never the events transport, state versions, or watermarks.
-_DROPPABLE = {
-    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-}
-
-
 def drop_removed_tables(cfg: ReplConfig) -> list[str]:
     """DDL drop replay (``README.md:38`` — incremental dumps carry DDL
     events; Hive's REPL LOAD removes tables dropped at the source): a
@@ -317,7 +312,7 @@ def drop_removed_tables(cfg: ReplConfig) -> list[str]:
         return dropped
     for entry in sorted(tgt_root.iterdir()):
         name = entry.name.removesuffix(".parquet")
-        if name in _DROPPABLE and name not in src:
+        if name in MANAGED_TABLES and name not in src:
             if entry.is_dir():
                 shutil.rmtree(entry)
             else:

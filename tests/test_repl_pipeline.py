@@ -205,17 +205,56 @@ def test_run_lock(tmp_path):
     with RunLock(tmp_path, "dump"):
         with pytest.raises(LockHeldError):
             RunLock(tmp_path, "dump").acquire()
+        # only the holding object releases; another instance's release is
+        # a no-op, even in the holder's own process
+        RunLock(tmp_path, "dump").release()
+        with pytest.raises(LockHeldError):
+            RunLock(tmp_path, "dump").acquire()
     # released → can reacquire
     with RunLock(tmp_path, "dump"):
         pass
 
 
+def _sigkilled_holder(lock_dir) -> None:
+    """Run a process that holds ``RunLock(lock_dir, 'dump')``, check that it
+    excludes us while it lives, then SIGKILL it — a holder that dies without
+    releasing, like a crashed run."""
+    import subprocess
+    import sys
+
+    holder = subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import sys, time\n"
+            "from hive3_replication_spark.repl.registry import RunLock\n"
+            "lock = RunLock(sys.argv[1], 'dump')\n"
+            "lock.acquire()\n"
+            "print('held', flush=True)\n"
+            "time.sleep(300)\n",
+            str(lock_dir),
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        with pytest.raises(LockHeldError):
+            RunLock(lock_dir, "dump").acquire()
+    finally:
+        holder.kill()
+        holder.wait(30)
+        holder.stdout.close()
+
+
 def test_stale_lock_takeover(tmp_path):
-    lock = RunLock(tmp_path, "dump")
-    lock.path.mkdir(parents=True)
-    (lock.path / "pid").write_text("999999999")  # dead pid
-    with RunLock(tmp_path, "dump"):  # takes over (misc_functions.sh:168-180)
-        pass
+    """The kernel drops a SIGKILLed holder's flock, so the next run acquires
+    at once — no stale-pid check (misc_functions.sh:168-180) needed."""
+    import os
+
+    _sigkilled_holder(tmp_path)
+    with RunLock(tmp_path, "dump") as lock:
+        assert lock.path.read_text() == f"{os.getpid()}\n"
 
 
 def test_retry_exhaustion():
@@ -344,6 +383,39 @@ def test_cli_end_to_end(tmp_path):
     assert len(arts) == 1
 
 
+def test_locked_run_appends_no_watermark(spark, repl_env, monkeypatch, capsys):
+    """The CLI's "locked" exit (hive3repl.sh:67-70): while another run holds
+    the db's instance lock, run_replication raises LockHeldError before any
+    phase runs, so no watermark row is appended; main() reports status
+    "locked" and exits 2."""
+    import json as _json
+
+    from hive3_replication_spark import __main__ as cli
+    from hive3_replication_spark.repl import snapshot as snap
+
+    cfg, run_dir, wm_dir, *_ = repl_env
+    # main() stops the session it is given: hand it the shared one, unstoppable
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr(cli, "get_spark", lambda **_: spark)
+    with RunLock(f"{cfg.repl_root}/_locks", f"instance_{cfg.db_name}"):
+        with pytest.raises(LockHeldError):
+            run_replication(spark, cfg, run_dir, wm_dir)
+        rc = cli.main([
+            cfg.db_name,
+            "--source-root", cfg.source_root,
+            "--target-root", cfg.target_root,
+            "--repl-root", cfg.repl_root,
+            "--watermark-dir", wm_dir,
+            "--run-dir", run_dir,
+            "--allowlist", cfg.db_name,
+        ])
+    assert rc == 2
+    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["db_name"] == cfg.db_name and out["status"] == "locked"
+    assert not Path(wm_dir).exists()
+    assert snap.repl_status(spark, wm_dir, cfg.db_name) is None
+
+
 class _ConnectLikeSession:
     """A session with no py4j gateway — what ``spark._jvm`` access would
     look like under Spark Connect (the attributes simply don't exist)."""
@@ -393,298 +465,66 @@ def test_fs_copy_remote_uri_without_gateway_raises_clearly(tmp_path):
         )
 
 
-def _race_acquire(tmp_path, n_threads: int) -> list[str]:
-    """Race ``n_threads`` concurrent acquirers of the same lock through a
-    barrier; returns one 'won'/'lost' token per thread."""
+def _race_acquire(lock_dir, n_threads: int) -> list[str | None]:
+    """Race ``n_threads`` acquirers of the same lock through a barrier;
+    returns one 'won'/'lost' per thread (None if it raised anything else).
+    Every RunLock stays referenced until all threads have tried; then the
+    winner releases through its own object."""
+    import sys
     import threading
 
-    results: list[str] = []
-    out_lock = threading.Lock()
+    locks = [RunLock(lock_dir, "dump") for _ in range(n_threads)]
+    results: list[str | None] = [None] * n_threads
     barrier = threading.Barrier(n_threads)
 
-    def worker() -> None:
-        lock = RunLock(tmp_path, "dump")
+    def worker(i: int) -> None:
         barrier.wait()
         try:
-            lock.acquire()
-            token = "won"
+            locks[i].acquire()
+            results[i] = "won"
         except LockHeldError:
-            token = "lost"
-        with out_lock:
-            results.append(token)
+            results[i] = "lost"
 
-    threads = [threading.Thread(target=worker) for _ in range(n_threads)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    threads = [
+        threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
+    ]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(switch)
+    for lock, result in zip(locks, results):
+        if result == "won":
+            lock.release()
     return results
 
 
 def test_run_lock_race_single_winner(tmp_path):
-    """16 simultaneous acquirers: mkdir atomicity must admit EXACTLY one
-    (the reference's dump.lock guards a whole replication run — a double
-    acquire would interleave two dumps; beeline_functions.sh:92-101)."""
-    results = _race_acquire(tmp_path, 16)
-    assert len(results) == 16 and results.count("won") == 1, results
-    # the winning thread shares our pid, so an owned release must work
-    # and free the lock for a fresh uncontended acquire
-    RunLock(tmp_path, "dump").release()
+    """16 simultaneous acquirers, 50 times over on one lock file: flock must
+    admit EXACTLY one each time (the reference's dump.lock guards a whole
+    replication run — a double acquire would interleave two dumps;
+    beeline_functions.sh:92-101)."""
+    for rep in range(50):
+        results = _race_acquire(tmp_path, 16)
+        assert results.count("won") == 1, (rep, results)
+        assert results.count("lost") == 15, (rep, results)
     with RunLock(tmp_path, "dump"):
         pass
 
 
 def test_stale_lock_takeover_race_single_winner(tmp_path):
-    """8 simultaneous acquirers against a STALE (dead-pid) lock: the
-    rename-aside takeover must elect exactly one claimer — the losers see
-    either the winner's fresh lock (owner alive) or its mid-acquire
-    window (no pid yet, inside the grace period) and raise LockHeldError
-    rather than double-claiming (misc_functions.sh:168-180, made atomic)."""
-    stale = RunLock(tmp_path, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead pid
-
+    """8 simultaneous acquirers right after the holder was SIGKILLed: the
+    dead holder's lock is gone, and exactly one of them wins it."""
+    _sigkilled_holder(tmp_path)
     results = _race_acquire(tmp_path, 8)
-    assert len(results) == 8 and results.count("won") == 1, results
-    # exactly one lock dir remains, owned by this process, releasable
-    assert (stale.path / "pid").read_text() == str(__import__("os").getpid())
-    RunLock(tmp_path, "dump").release()
-    assert not stale.path.exists()
-
-
-def test_takeover_marker_pid_staleness(tmp_path):
-    """ADVICE r8 + round-9 review: the takeover marker carries its
-    claimer's pid, and marker staleness mirrors the lock's own check —
-    a marker whose claimer is STILL ALIVE is kept through any realistic
-    stall (a takeover stalled past the 5 s grace keeps its exclusivity;
-    the old pure-age rule would have rmtree'd it and re-opened the
-    steal window) — but a pid-bearing marker older than the hard
-    backstop is cleared anyway, because at that age the 'alive' pid is
-    a RECYCLED one and honoring it would deadlock every future
-    takeover. A dead-claimer marker is cleared immediately."""
-    import os
-    import time
-
-    from hive3_replication_spark.repl import registry as reg
-
-    stale = RunLock(tmp_path, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-    marker.mkdir()
-    (marker / "pid").write_text(str(os.getpid()))  # live claimer (us)
-    stalled = time.time() - 60  # past the 5 s grace, inside the backstop
-    os.utime(marker, (stalled, stalled))
-    with pytest.raises(LockHeldError):
-        RunLock(tmp_path, "dump").acquire()
-    assert marker.exists(), "live-claimer marker cleared inside backstop"
-    # same live pid but older than the recycled-pid backstop: cleared,
-    # takeover completes
-    ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-    os.utime(marker, (ancient, ancient))
-    lock2 = RunLock(tmp_path, "dump")
-    lock2.acquire()
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    lock2.release()
-    assert not stale.path.exists()
-    # dead-claimer marker: cleared immediately regardless of age
-    stale.path.mkdir()
-    (stale.path / "pid").write_text("999999999")
-    marker.mkdir()
-    (marker / "pid").write_text("999999999")
-    recent = time.time() - 1
-    os.utime(marker, (recent, recent))
-    lock3 = RunLock(tmp_path, "dump")
-    lock3.acquire()
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    lock3.release()
-
-
-def test_marker_backstop_takeover_race_single_winner(tmp_path):
-    """Round-10 race target (VERDICT r9 ask #4): 8 claimers racing the
-    RECYCLED-PID BACKSTOP — a stale dead-pid lock guarded by a takeover
-    marker that is older than _MARKER_MAX_AGE_S yet carries a live pid
-    (the recycled-pid shape the backstop exists for). Exactly one
-    claimer may clear the ancient marker and complete the takeover; the
-    losers must see the winner's fresh marker/lock and raise, never
-    double-claim. 10 repetitions — this harness found real bugs three
-    rounds running."""
-    import os
-    import time
-
-    from hive3_replication_spark.repl import registry as reg
-
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-        marker = stale.path.with_name(f"{stale.path.name}.takeover")
-        marker.mkdir()
-        (marker / "pid").write_text(str(os.getpid()))  # "live" claimer
-        ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-        os.utime(marker, (ancient, ancient))
-
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
-        assert (stale.path / "pid").read_text() == str(os.getpid())
-        assert not marker.exists(), "winner must clear its own marker"
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
-
-
-def test_marker_pid_reread_detects_swap(tmp_path, monkeypatch):
-    """ADVICE r9 TOCTOU regression test: if the marker is replaced by a
-    NEW live claimer between the staleness pid read and the stat, the
-    pid re-read straddling the stat must detect the swap and retry —
-    the pre-fix code paired the dead old pid with the fresh mtime and
-    rmtree'd the LIVE claimer's marker. Simulated deterministically by
-    feeding the two reads different pids for one iteration."""
-    import os
-
-    from hive3_replication_spark.repl import registry as reg
-
-    stale = RunLock(tmp_path, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-    marker.mkdir()
-    (marker / "pid").write_text(str(os.getpid()))  # live claimer, fresh
-
-    real = reg.RunLock._marker_pid
-    feed = iter([999999999])  # first read: the vanished old claimer
-
-    def swapped(m):
-        try:
-            return next(feed)
-        except StopIteration:
-            return real(m)
-
-    monkeypatch.setattr(reg.RunLock, "_marker_pid", staticmethod(swapped))
-    with pytest.raises(LockHeldError):
-        RunLock(tmp_path, "dump").acquire()
-    assert marker.exists(), (
-        "pid/stat swap window rmtree'd a live claimer's marker"
-    )
-
-
-def test_reclaim_own_marker_frozen_validation(tmp_path, monkeypatch):
-    """ADVICE r10: the own-ghost-marker reclaim must rename-aside and
-    re-validate the frozen copy's token, never rmtree on a pre-read
-    token. Three branches: (a) the frozen copy IS ours — deleted;
-    (b) the frozen copy carries a FOREIGN token (the ghost was displaced
-    and the path re-used between the caller's read and the rename) —
-    restored intact; (c) foreign token AND the restore path re-occupied
-    — the copy is dropped, the occupier's marker survives."""
-    import os
-
-    from hive3_replication_spark.repl.registry import RunLock
-
-    marker = tmp_path / "dump.lock.takeover"
-
-    # (a) ours → reclaimed
-    marker.mkdir()
-    (marker / "pid").write_text("123\nghost-token")
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    assert not marker.exists()
-    assert not list(tmp_path.glob("*.reclaim-*")), "frozen copy leaked"
-
-    # (b) foreign → restored with its token intact
-    marker.mkdir()
-    (marker / "pid").write_text("456\nlive-claimer-token")
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    assert marker.exists()
-    assert (marker / "pid").read_text() == "456\nlive-claimer-token"
-    assert not list(tmp_path.glob("*.reclaim-*"))
-
-    # (c) foreign + restore blocked (path re-occupied while frozen):
-    # the copy is dropped, the occupier's marker is untouched
-    real_rename = os.rename
-    occupied = {"done": False}
-
-    def rename_and_occupy(src, dst):
-        real_rename(src, dst)
-        if not occupied["done"]:
-            occupied["done"] = True
-            marker.mkdir()  # a third claimer re-creates the marker
-            (marker / "pid").write_text("789\noccupier-token")
-
-    monkeypatch.setattr(os, "rename", rename_and_occupy)
-    RunLock._reclaim_own_marker(marker, {"123\nghost-token"})
-    monkeypatch.undo()
-    assert (marker / "pid").read_text() == "789\noccupier-token", (
-        "occupier's live marker must survive the blocked restore"
-    )
-    assert not list(tmp_path.glob("*.reclaim-*")), "frozen copy leaked"
-
-
-def test_marker_zero_backstop_race_single_winner(tmp_path, monkeypatch):
-    """Round-11 race target (VERDICT r10 ask #7): the takeover race at an
-    adversarial ZERO-second recycled-pid backstop — every claimer's fresh
-    marker reads as backstop-stale to every other claimer, so all of them
-    route through _clear_marker_frozen against each other's LIVE markers
-    every retry. The freshness re-check inside the frozen clear (live pid
-    + mtime within grace → restore untouched) is the only thing standing
-    between this configuration and a marker-steal double acquire; 10 reps
-    must elect exactly one winner each with no frozen-copy debris."""
-    import os
-
-    from hive3_replication_spark.repl import registry as reg
-
-    monkeypatch.setattr(reg, "_MARKER_MAX_AGE_S", 0.0)
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
-        assert (stale.path / "pid").read_text() == str(os.getpid())
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
-        debris = [
-            p.name
-            for p in base.glob("*")
-            if ".reclaim-" in p.name or ".clear-" in p.name
-            or ".stale-" in p.name
-        ]
-        assert not debris, (rep, debris)
-
-
-def test_token_format_marker_backstop_race(tmp_path):
-    """Round-11 race target (VERDICT r10 ask #7, thread-token format):
-    the recycled-pid-backstop race seeded with a marker in the TWO-LINE
-    token format the round-10 code writes (pid + thread-token second
-    line) — the staleness parsers must read the pid off line one and the
-    clear/takeover paths must behave exactly as with a bare-pid marker.
-    10 reps, exactly one winner each."""
-    import os
-    import time
-
-    from hive3_replication_spark.repl import registry as reg
-
-    for rep in range(10):
-        base = tmp_path / f"rep{rep}"
-        base.mkdir()
-        stale = RunLock(base, "dump")
-        stale.path.mkdir(parents=True)
-        (stale.path / "pid").write_text("999999999")  # dead lock owner
-        marker = stale.path.with_name(f"{stale.path.name}.takeover")
-        marker.mkdir()
-        # live pid, token format, ancient — the recycled-pid shape
-        (marker / "pid").write_text(f"{os.getpid()}\n12345:67890")
-        ancient = time.time() - reg._MARKER_MAX_AGE_S - 10
-        os.utime(marker, (ancient, ancient))
-
-        results = _race_acquire(base, 8)
-        assert results.count("won") == 1, (rep, results)
-        assert (stale.path / "pid").read_text() == str(os.getpid())
-        assert not marker.exists(), "winner must clear its own marker"
-        RunLock(base, "dump").release()
-        assert not stale.path.exists()
+    assert results.count("won") == 1 and results.count("lost") == 7, results
+    with RunLock(tmp_path, "dump"):
+        pass
 
 
 def test_local_path_uri_edge_cases():
@@ -715,7 +555,7 @@ def test_export_run_log_concurrent_writers_unique_valid(tmp_path, monkeypatch):
     to the SAME timestamp (worst case — monkeypatched clock) must each
     write their OWN parseable JSON artifact. Pre-fix, same-stamp writers
     opened one shared path with 'w' and interleaved two JSON bodies into
-    a corrupt file; the O_EXCL + collision-suffix create makes every
+    a corrupt file; the exclusive create under a random suffix makes every
     writer exclusive."""
     import datetime as real_dt
     import json as _json
@@ -771,117 +611,6 @@ def test_export_run_log_concurrent_writers_unique_valid(tmp_path, monkeypatch):
         body = _json.loads(open(p, encoding="utf-8").read())
         seen.add((body["writer"], body["rep"]))
     assert len(seen) == n_threads * n_reps
-
-
-def test_reclaim_drop_interval_frozen_validation_floor(tmp_path, monkeypatch):
-    """ADVICE r11: _reclaim_own_marker's blocked-restore branch drops a
-    foreign claimer's live marker copy; if that claimer had ALREADY
-    passed its token re-check, marker exclusivity is silently lost for
-    the interval and TWO claimers run the takeover tail concurrently.
-    This rep choreographs exactly that interval with event gates:
-
-      B: full acquire, past its token re-check, frozen just before its
-         lock rename;
-      R: the REAL _reclaim_own_marker — rename-aside lands, restore is
-         blocked by C's marker, B's copy is dropped (branch c);
-      C: full acquire through a fresh marker, wins the lock while B
-         still believes it holds exclusivity;
-      B released: renames C's LIVE lock — the post-rename frozen
-         validation MUST restore it and send B to a LockHeldError.
-
-    Confirms the lock-rename + frozen-validation floor alone prevents a
-    double acquire, with the victim lock intact."""
-    import os
-    import threading
-    import time as _time
-
-    from hive3_replication_spark.repl.registry import RunLock
-
-    base = tmp_path
-    stale = RunLock(base, "dump")
-    stale.path.mkdir(parents=True)
-    (stale.path / "pid").write_text("999999999")  # dead lock owner
-    lock_path = str(stale.path)
-    marker = stale.path.with_name(f"{stale.path.name}.takeover")
-
-    idents: dict[str, int] = {}
-    gates = {k: threading.Event() for k in (
-        "b_at_rename", "go_b", "aside_done", "c_marker_up", "go_c",
-    )}
-    real_rename = os.rename
-
-    def gated_rename(src, dst):
-        me = threading.get_ident()
-        if str(src) == lock_path and me == idents.get("b"):
-            gates["b_at_rename"].set()
-            assert gates["go_b"].wait(30)
-        elif str(src) == lock_path and me == idents.get("c"):
-            assert gates["go_c"].wait(30)
-        elif str(src) == str(marker) and me == idents.get("r"):
-            real_rename(src, dst)
-            gates["aside_done"].set()
-            assert gates["c_marker_up"].wait(30)
-            return
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", gated_rename)
-    results: dict[str, str] = {}
-
-    def claim(tag: str) -> None:
-        idents[tag] = threading.get_ident()
-        try:
-            RunLock(base, "dump").acquire()
-            results[tag] = "won"
-        except LockHeldError:
-            results[tag] = "lost"
-
-    t_b = threading.Thread(target=claim, args=("b",))
-    t_b.start()
-    assert gates["b_at_rename"].wait(30)  # B past its token re-check
-
-    def reclaim() -> None:
-        idents["r"] = threading.get_ident()
-        # ghost token ≠ B's live token ⇒ foreign-copy branch
-        RunLock._reclaim_own_marker(marker, {"000\nghost-token"})
-
-    t_r = threading.Thread(target=reclaim)
-    t_r.start()
-    assert gates["aside_done"].wait(30)  # B's marker frozen aside
-
-    t_c = threading.Thread(target=claim, args=("c",))
-    t_c.start()
-    for _ in range(300):  # C's fresh marker re-occupies the path
-        tok = RunLock._marker_token(marker)
-        if tok is not None and tok.splitlines()[0] == str(os.getpid()):
-            break
-        _time.sleep(0.01)
-    else:
-        raise AssertionError("C never created its marker")
-    gates["c_marker_up"].set()  # R's restore now blocked → drops B's copy
-    t_r.join(30)
-    assert not t_r.is_alive()
-    assert not list(base.glob("*.reclaim-*")), "B's frozen copy must drop"
-
-    gates["go_c"].set()  # C runs the takeover tail and wins
-    t_c.join(30)
-    assert not t_c.is_alive() and results["c"] == "won"
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-
-    gates["go_b"].set()  # B now renames C's LIVE lock
-    t_b.join(30)
-    assert not t_b.is_alive()
-    # the frozen validation restored C's lock and B lost — no double
-    # acquire, no destroyed live lock
-    assert results["b"] == "lost"
-    assert (stale.path / "pid").read_text() == str(os.getpid())
-    monkeypatch.undo()
-    RunLock(base, "dump").release()
-    assert not stale.path.exists()
-    debris = [
-        p.name for p in base.glob("*")
-        if ".reclaim-" in p.name or ".stale-" in p.name
-    ]
-    assert not debris, debris
 
 
 def test_parity_resume_never_erases_failures():
